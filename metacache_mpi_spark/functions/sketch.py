@@ -147,23 +147,6 @@ def winnow_fingerprints(hashes: np.ndarray, w: int) -> np.ndarray:
     return np.unique(sliding_min(hashes, w))
 
 
-def make_winnow_udf(k: int, w: int):
-    """pandas UDF: text → array<long> winnowing fingerprints."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _winnow(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            fp = winnow_fingerprints(shingle_hashes(t, k), w)
-            out.append(fp.astype(np.int64).tolist())
-        return pd.Series(out, dtype=object)
-
-    return _winnow
-
-
 # --------------------------------------------------------------------------
 # pandas UDF factories
 # --------------------------------------------------------------------------
@@ -238,24 +221,6 @@ def make_minhash_udf(k: int, s: int, seed: int):
         return pd.Series(out, dtype=object)
 
     return _minhash
-
-
-def make_bottom_sketch_udf(k: int, s: int):
-    """pandas UDF: text → array<long> bottom-s sketch (reference-parity
-    sketch; may be shorter than s, empty for short docs)."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sketch(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            sk = bottom_s_sketch(shingle_hashes(t, k), s)
-            out.append(sk.astype(np.int64).tolist())
-        return pd.Series(out, dtype=object)
-
-    return _sketch
 
 
 def make_simhash_udf():

@@ -192,7 +192,7 @@ def _apply_index_postprocess(
     """
     counts = rows.groupBy("feature").agg(F.count(F.lit(1)).alias("n"))
     # feature-count sets scale with the index — shuffle join, never a
-    # broadcast build (see prune_buckets)
+    # broadcast build (see lsh.bucket_pairs)
     if cfg.remove_overpopulated:
         keep = counts.where(F.col("n") <= cfg.max_locs_per_feature)
         return rows.join(
@@ -201,7 +201,7 @@ def _apply_index_postprocess(
     # cap: only oversize features pay the per-feature sort window — the
     # bulk bypasses it entirely, and no mega-hot feature funnels through
     # a single task before being counted (same count-first discipline as
-    # prune_buckets)
+    # lsh.bucket_pairs)
     small = rows.join(
         counts.where(F.col("n") <= cfg.max_locs_per_feature)
         .select("feature")

@@ -74,7 +74,7 @@ def pii_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     (``contains`` / one-char-class ``rlike``) before paying the full
     regex — on corpora where most documents carry no PII the expensive
     scans are skipped entirely, and where PII is dense the gates cost
-    two trivial passes next to six regex passes.
+    two trivial passes next to three regex passes.
     """
     t = F.col(text_col)
     has_at = t.contains("@")

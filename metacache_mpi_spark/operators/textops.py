@@ -57,7 +57,7 @@ def discriminative_shingles(
         .select("sh")
     )
     # the surviving-shingle set scales with the corpus — shuffle join,
-    # not a broadcast build (see prune_buckets scale note)
+    # not a broadcast build (see lsh.bucket_pairs scale note)
     return sh.join(keep.hint("shuffle_hash"), "sh")
 
 
@@ -260,15 +260,6 @@ def contamination_pairs_bloom(
     # can reach the join
     return _containment_pairs(
         pre, es, cap, min_containment_milli, exclude_self
-    )
-
-
-def _shingle_arr_sql(k: int, text_col: str = "text") -> str:
-    """SQL for the DISTINCT k-shingle array of ``text_col`` (the array
-    form of :func:`shingles` — row-local, no explode)."""
-    return (
-        f"array_distinct(transform(sequence(1, length({text_col}) - {k - 1}), "
-        f"i -> substring({text_col}, i, {k})))"
     )
 
 

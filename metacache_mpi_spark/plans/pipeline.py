@@ -20,7 +20,7 @@ Spark restatement of the reference's build+query lifecycle
              └─ (doc_id, cluster_id) assignments
 
 Every stage output can be snapshotted through a CheckpointManager for
-resumable execution; per-stage row counts land in the metrics dict.
+resumable execution.
 """
 
 from __future__ import annotations

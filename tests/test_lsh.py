@@ -8,12 +8,15 @@ from pyspark.sql import functions as F
 
 from metacache_mpi_spark.config import DedupConfig
 from metacache_mpi_spark.operators.lsh import (
+    bucket_join_pairs,
+    bucket_pairs,
     candidate_pairs,
     emit_bands,
     lsh_candidate_pairs,
-    prune_buckets,
     two_lane_candidate_pairs,
 )
+
+BUCKET = ["band", "bucket"]
 
 
 @pytest.fixture()
@@ -27,31 +30,48 @@ def band_rows(spark):
     return spark.createDataFrame(rows, "doc_id long, band int, bucket long")
 
 
+def _bucket_rows(df):
+    return {(r["band"], r["bucket"], r["a"], r["b"]) for r in df.collect()}
+
+
 def test_bucket_cap_drop(spark, band_rows):
-    cfg = DedupConfig(max_docs_per_bucket=4)
-    got = {
-        (r["band"], r["bucket"]): r["ids"]
-        for r in prune_buckets(band_rows, cfg).collect()
-    }
-    assert got == {(0, 100): [1, 2, 3]}  # singleton + oversize dropped
+    got = _bucket_rows(bucket_pairs(band_rows, "doc_id", BUCKET, 4, "drop"))
+    # singleton + oversize dropped
+    assert got == {(0, 100, 1, 2), (0, 100, 1, 3), (0, 100, 2, 3)}
 
 
 def test_bucket_cap_sample_keeps_capped_subset(spark, band_rows):
-    cfg = DedupConfig(max_docs_per_bucket=4)
-    got = {
-        (r["band"], r["bucket"]): r["ids"]
-        for r in prune_buckets(band_rows, cfg, oversize_policy="sample").collect()
+    got = _bucket_rows(bucket_pairs(band_rows, "doc_id", BUCKET, 4, "sample"))
+    assert {r for r in got if r[:2] == (0, 100)} == {
+        (0, 100, 1, 2), (0, 100, 1, 3), (0, 100, 2, 3)
     }
-    assert got[(0, 100)] == [1, 2, 3]
-    assert len(got[(1, 300)]) == 4  # deterministic sample of the hot bucket
-    assert set(got[(1, 300)]) < {10, 11, 12, 13, 14}
-    again = {
-        (r["band"], r["bucket"]): r["ids"]
-        for r in prune_buckets(
-            band_rows.repartition(5), cfg, oversize_policy="sample"
-        ).collect()
-    }
+    hot = [r for r in got if r[:2] == (1, 300)]
+    kept = {r[2] for r in hot} | {r[3] for r in hot}
+    assert len(kept) == 4  # deterministic sample of the hot bucket
+    assert kept < {10, 11, 12, 13, 14}
+    assert len(hot) == 6  # all pairs of the sampled members
+    again = _bucket_rows(
+        bucket_pairs(band_rows.repartition(5), "doc_id", BUCKET, 4, "sample")
+    )
     assert again == got  # partitioning-invariant
+
+
+@pytest.mark.parametrize("policy", ["drop", "sample", "star"])
+def test_bucket_consumers_agree(spark, band_rows, policy):
+    """The band-hit lane and the distinct-pair lane are projections of
+    one bucket_pairs plan, so their pair sets cannot drift."""
+    cfg = DedupConfig(max_docs_per_bucket=4, oversize_policy=policy)
+    counted = {(r["a"], r["b"]) for r in candidate_pairs(band_rows, cfg).collect()}
+    distinct = {
+        (r["a"], r["b"])
+        for r in bucket_join_pairs(band_rows, "doc_id", BUCKET, 4, policy).collect()
+    }
+    assert counted == distinct and counted
+
+
+def test_bucket_pairs_rejects_unknown_policy(spark, band_rows):
+    with pytest.raises(ValueError, match="oversize_policy"):
+        bucket_pairs(band_rows, "doc_id", BUCKET, 4, "keep")
 
 
 def test_candidate_pairs_counts_band_hits(spark):
@@ -104,10 +124,13 @@ def test_emit_bands_shape(spark):
 
 
 def test_fingerprint_lane_applies_min_fp_hits(spark):
-    """Regression: the standalone winnow lane must enforce min_fp_hits
-    (config.py boilerplate pruning), not candidate_pairs' min_band_hits=1."""
-    from metacache_mpi_spark.config import DedupConfig
-    from metacache_mpi_spark.operators.lsh import fingerprint_candidate_pairs
+    """Regression: the winnow fingerprint lane (band -1 rows of the
+    pipeline's unified bucket table) must enforce min_fp_hits (config.py
+    boilerplate pruning), not the LSH lane's min_band_hits=1."""
+    from metacache_mpi_spark.functions.sketch import (
+        SKETCH_SCHEMA,
+        make_sketch_mapper,
+    )
 
     import numpy as np
 
@@ -130,7 +153,13 @@ def test_fingerprint_lane_applies_min_fp_hits(spark):
         "doc_id long, text string",
     )
     cfg = DedupConfig(shingle_k=8, winnow_w=50, min_fp_hits=3)
-    got = fingerprint_candidate_pairs(docs, cfg).collect()
+    mapper = make_sketch_mapper(
+        cfg.shingle_k, cfg.sketch_size, cfg.minhash_seed, cfg.winnow_w
+    )
+    fp_rows = docs.mapInPandas(mapper, schema=SKETCH_SCHEMA).select(
+        "doc_id", F.lit(-1).alias("band"), F.explode("fps").alias("bucket")
+    )
+    got = two_lane_candidate_pairs(fp_rows, cfg).collect()
     assert all(r["fp_hits"] >= cfg.min_fp_hits for r in got)
     assert {(r["a"], r["b"]) for r in got} == {(1, 2)}
 

@@ -105,7 +105,7 @@ def test_pii_pre_gates_are_sound(spark):
     assert (out[6]["clean_text"], out[6]["n_redactions"]) == ("", 0)
     s = {r["doc_id"]: r for r in pii_stats(docs).collect()}
     assert (s[1]["n_emails"], s[1]["n_ipv4"], s[1]["n_phones"]) == (0, 0, 0)
-    assert (s[2]["n_emails"], s[2]["n_phones"]) == (0, 1)
+    assert (s[2]["n_emails"], s[2]["n_ipv4"], s[2]["n_phones"]) == (0, 0, 1)
     assert (s[3]["n_emails"], s[3]["n_ipv4"]) == (1, 0)
     assert (s[4]["n_emails"], s[4]["n_ipv4"], s[4]["n_phones"]) == (1, 1, 2)
     assert (s[5]["n_emails"], s[5]["n_ipv4"], s[5]["n_phones"]) == (0, 0, 0)
